@@ -17,7 +17,7 @@ import sys
 
 from pyspark.sql import functions as F
 
-from debias_spark.pipeline import PipelineConfig, run_pipeline
+from debias_spark.pipeline import PipelineConfig, report_rows, run_pipeline
 from debias_spark.session import get_spark
 
 
@@ -147,14 +147,43 @@ def main(argv: list[str] | None = None) -> int:
         out_dir = pathlib.Path(cfg.output_folder)
         out_dir.mkdir(parents=True, exist_ok=True)
         log_file = str(out_dir / "debias.log")
+    fh = None
     if log_file:
         fh = logging.FileHandler(log_file)
         fh.setFormatter(logging.Formatter("%(asctime)s %(levelname)s %(message)s"))
         log.addHandler(fh)
+    try:
+        return _run_pipeline_mode(args, cfg, log)
+    finally:
+        if fh is not None:
+            log.removeHandler(fh)
+            fh.close()
 
+
+def _run_pipeline_mode(args, cfg: PipelineConfig, log: logging.Logger) -> int:
+    """Scan -> annotate -> sink, then the summary and the reports, all over
+    the one persisted annotated frame: each line is annotated once."""
     spark = get_spark("debias-spark-cli")
     log.info("run start: input=%s output=%s", cfg.input_folder, cfg.output_folder)
     annotated = run_pipeline(spark, cfg, per_file_compat=not args.partitioned)
+    try:
+        _print_summary(annotated, args.summary_limit, log)
+        if args.reports != "none":
+            from debias_spark.report import render_reports
+
+            names = render_reports(
+                report_rows(annotated), cfg.output_folder, fmt=args.reports
+            )
+            log.info("wrote %d reports", len(names))
+    finally:
+        annotated.unpersist()
+    print(f"wrote outputs to {cfg.output_folder}")
+    log.info("run done: outputs in %s", cfg.output_folder)
+    return 0
+
+
+def _print_summary(annotated, limit: int, log: logging.Logger) -> None:
+    """The reference's per-file log lines (call-debias.py:151,157)."""
     summary = (
         annotated.groupBy("src_file", "language")
         .agg(
@@ -168,8 +197,8 @@ def main(argv: list[str] | None = None) -> int:
     # bounded no matter how many input files the corpus has.
     shown = 0
     for r in summary.toLocalIterator():
-        if shown >= args.summary_limit:
-            print(f"... (further files elided; --summary-limit {args.summary_limit})")
+        if shown >= limit:
+            print(f"... (further files elided; --summary-limit {limit})")
             break
         line = (
             f"{r.src_file} [{r.language}]: {r.records} records, "
@@ -178,17 +207,6 @@ def main(argv: list[str] | None = None) -> int:
         print(line)
         log.info("%s", line)
         shown += 1
-    if args.reports != "none":
-        from debias_spark.pipeline import report_rows
-        from debias_spark.report import render_reports
-
-        names = render_reports(
-            report_rows(annotated), cfg.output_folder, fmt=args.reports
-        )
-        log.info("wrote %d reports", len(names))
-    print(f"wrote outputs to {cfg.output_folder}")
-    log.info("run done: outputs in %s", cfg.output_folder)
-    return 0
 
 
 if __name__ == "__main__":

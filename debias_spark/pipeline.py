@@ -17,7 +17,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from debias_spark.annotate import AnnotateConfig, analytics_frame, annotate, flagged
 from debias_spark.sources import (
@@ -81,25 +80,34 @@ def run_pipeline(
     per_file_compat: bool = True,
     languages: tuple[str, ...] = SUPPORTED_LANGUAGES,
 ) -> DataFrame:
-    """Scan -> annotate -> sink.  Returns the annotated corpus DataFrame.
+    """Scan -> annotate -> sink.  Returns the annotated corpus DataFrame,
+    persisted: the sink computes it once, and the caller's summary and
+    reports read it back instead of annotating every line again.  The caller
+    unpersists it; if the sink raises, this function does.
 
     per_file_compat=True writes the reference's '<stem>-output.json' docs;
     False writes the distributed language-partitioned NDJSON sink (the
     100 TB path)."""
     corpus = read_corpus(spark, cfg.input_folder, languages=languages)
-    # _seq (per-file line number) makes the per-file results arrays and the
-    # report row order deterministic in input order, like the reference.
+    # _seq (per-file line order key) makes the per-file results arrays and
+    # the report row order deterministic in input order, like the reference.
     corpus = with_line_seq(corpus)
     ann_cfg = AnnotateConfig(
         max_retries=cfg.max_retries, use_ner=cfg.use_ner, use_llm=cfg.use_llm
     )
     if client_factory is not None:
         ann_cfg.client_factory = client_factory
-    annotated = annotate(corpus, text_col="value", lang_col="language", config=ann_cfg)
-    if per_file_compat:
-        write_outputs_per_file(annotated, cfg.output_folder)
-    else:
-        write_outputs_partitioned(annotated, cfg.output_folder)
+    annotated = annotate(
+        corpus, text_col="value", lang_col="language", config=ann_cfg
+    ).persist()
+    try:
+        if per_file_compat:
+            write_outputs_per_file(annotated, cfg.output_folder)
+        else:
+            write_outputs_partitioned(annotated, cfg.output_folder)
+    except BaseException:
+        annotated.unpersist()
+        raise
     return annotated
 
 

@@ -10,10 +10,16 @@ Only the master URL and memory sizing are local-mode artifacts.
 from __future__ import annotations
 
 import os
+import pathlib
 
 from pyspark.sql import SparkSession
 
 APP_NAME = "debias-spark"
+
+# The directory that holds the debias_spark package.  Python workers unpickle
+# annotator closures by importing debias_spark, and a worker's sys.path is
+# its own: the driver's cwd or sys.path edits do not reach it.
+_PACKAGE_PARENT = str(pathlib.Path(__file__).resolve().parent.parent)
 
 # Scale posture (SURVEY §6): these settings are chosen for correctness at
 # local scale AND sanity at cluster scale.  shuffle.partitions=32 matches
@@ -56,6 +62,8 @@ def get_spark(app_name: str = APP_NAME, extra_conf: dict | None = None) -> Spark
     for k, v in _BASE_CONF.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+    # Spark appends the driver's $PYTHONPATH to this on the workers.
+    builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     # shuffle/spill scratch: the bench band protocol points this at tmpfs
     # (DEBIAS_LOCAL_DIR=/dev/shm/...) so spill IO stops timing co-tenant
     # disk contention; default (unset) keeps Spark's own /tmp behavior

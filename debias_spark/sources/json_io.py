@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
+from debias_spark.sources.text_corpus import path_parts
+
 TAG_SCHEMA = StructType(
     [
         StructField("literal", StringType()),
@@ -107,16 +109,16 @@ def write_outputs_per_file(annotated: DataFrame, output_dir: str) -> list[str]:
     Returns the written filenames.
 
     Fully distributed: the assembled documents are written partitioned by
-    src_file (one row -> one part file per partition dir), then the driver
-    performs an O(#files) rename/manifest pass — pure filesystem metadata,
-    no document content through driver memory."""
+    src_file straight from the groupBy's output, which already holds one row
+    per file (one row -> one part file per partition dir, no second shuffle),
+    then the driver performs an O(#files) rename/manifest pass — pure
+    filesystem metadata, no document content through driver memory."""
     out = pathlib.Path(output_dir)
     out.mkdir(parents=True, exist_ok=True)
     staging = out / "_staging_per_file"
     (
         assemble_response_docs(annotated)
         .select("src_file", F.col("json").alias("value"))
-        .repartition("src_file")
         .write.mode("overwrite")
         .partitionBy("src_file")
         .text(str(staging))
@@ -137,11 +139,21 @@ def write_outputs_per_file(annotated: DataFrame, output_dir: str) -> list[str]:
 
 
 def read_outputs(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Analytics source: glob *-output.json response docs back into the
-    nested row type + source filename (analytics/parser.py:16-20)."""
+    """Analytics source: the *-output.json response docs directly in
+    ``output_dir`` (the files of the reference's ``*-output.json`` glob,
+    analytics/parser.py:16-20), read back into the nested row type + source
+    filename.  The directory is read recursively, so a partitioned sink's
+    ``language=*/`` folders cannot conflict with the root's files, and a
+    depth filter drops every nested file."""
+    parts = F.col("_parts")
     return (
         spark.read.schema(RESPONSE_SCHEMA)
         .option("multiLine", "true")
-        .json(f"{output_dir}/*-output.json")
-        .withColumn("file", F.regexp_extract(F.input_file_name(), r"/([^/]+)$", 1))
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*-output.json")
+        .json(output_dir)
+        .withColumn("_parts", path_parts(spark, output_dir))
+        .filter(F.size(parts) == 1)
+        .withColumn("file", F.get(parts, 0))
+        .drop("_parts")
     )

@@ -37,7 +37,8 @@ def pipeline_out(spark, tmp_path_factory):
         f.write_text(content)
     cfg = PipelineConfig(str(inp), str(out), max_retries=2)
     annotated = run_pipeline(spark, cfg)
-    return annotated, out
+    yield annotated, out
+    annotated.unpersist()  # run_pipeline hands the cached frame to its caller
 
 
 def test_naming_contract_and_doc_shape(pipeline_out):
