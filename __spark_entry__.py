@@ -2,7 +2,7 @@
 
 Thin adapter over debias_spark.registry: every implemented operator from
 SURVEY.md §2 registers (spark_fn, duckdb_oracle) there; this module exposes
-the registry to the driver verbatim.
+those registrations to the driver, one entry per key, in registration order.
 """
 
 from __future__ import annotations
@@ -25,23 +25,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, in driver
-    priority order — derived mechanically from the committed
-    CORRECTNESS_r*.json artifacts (never-checked keys first, then failed,
-    then changed-since-check, then greens stalest-first; see
-    registry.priority_ordered)."""
-    from debias_spark.registry import priority_ordered
-
-    return {name: spec.fn for name, spec in priority_ordered().items()}
+    """One entry per implemented operator from SURVEY.md §2, in registration
+    order."""
+    return {name: spec.fn for name, spec in load_all_queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query key; keys absent here are rows-only
     (genuinely non-SQL-expressible: streaming/state/LSH internals)."""
-    from debias_spark.registry import priority_ordered
-
     return {
         name: spec.oracle
-        for name, spec in priority_ordered().items()
+        for name, spec in load_all_queries().items()
         if spec.oracle is not None
     }

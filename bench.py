@@ -90,9 +90,9 @@ def run_query(spec, spark, sf_dir: str) -> float:
 def main() -> None:
     spark = get_spark("debias-spark-bench")
     specs = load_all_queries()
-    # Registry order, not alphabetical: registration order is priority order
-    # (flagship LLM ops first), so if the recorded JSON line ever gets
-    # tail-truncated the high-signal per-query numbers survive.
+    # Registration order, not alphabetical (flagship LLM ops first), so if
+    # the recorded JSON line ever gets tail-truncated the high-signal
+    # per-query numbers survive.
     bench_specs = {n: s for n, s in specs.items() if s.bench}
 
     # Warmup: every query shape once at the MEASURED sf dir, so codegen

@@ -2,11 +2,8 @@
 
 Importing this package registers every query into debias_spark.registry.
 
-Import order IS the driver's correctness-check order (registry dicts keep
-insertion order, the driver iterates queries() in that order and stopped at
-exactly 50 keys in round 1).  The modules whose keys lack driver evidence
-register FIRST so any per-round key cap or time cutoff lands on keys that
-already have green CORRECTNESS_r01 rows, never on unproven ones.
+Import order is registration order, which is the order
+``__spark_entry__.queries()`` and ``bench.py`` iterate the keys in.
 """
 
 import debias_spark.queries.llm_ops36  # noqa: F401  Y5b pinned-centroid IVF, Y73 substring scrubber (round 10)

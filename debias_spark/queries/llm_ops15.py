@@ -28,13 +28,9 @@ _DUCK_ALL_TOKENS = (
 # fold, parsed by DuckDB to the bit-identical double), never
 # `+ 0.5 + 1e-9` (two left-assoc additions, up to 1 ulp apart, which
 # can flip floor() at the integer-boundary ties the eps exists to pin).
-# Migration is INCREMENTAL by design: each respelled oracle invalidates
-# a driver-proven hash, so legacy two-add sites move over in window-
-# sized batches via CHANGED_SINCE_CHECK (r8: this file + llm_ops20 +
-# relational_ext39; r9: the transcendental-adjacent sites the r8 advice
-# named — llm_ops8/13/17/21/25, relational_ext20/36).  Until a site
-# migrates, tools/float_margin_audit.py guards it (eps 0 vs 2e-9 re-run
-# fails on any transcendental boundary hit).
+# Any site still spelling the two additions is guarded by
+# tools/float_margin_audit.py (eps 0 vs 2e-9 re-run fails on any
+# transcendental boundary hit).
 _EPS = 0.5 + 1e-9
 
 

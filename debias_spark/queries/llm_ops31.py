@@ -288,9 +288,9 @@ def docs_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     #
     # r14 hardening, diagnose-then-choose (the fan_out / _salt_factor
     # doctrine — derive the shape from the input, never a constant
-    # tuned for one scale).  Measured (OPTIMIZATION_r14.md, tools/
-    # hotgram_stress.py): every skew-safe spelling LOSES at sf0.1
-    # (salted collect_list pack +80%, two-pass agg+semi +~15% flat and
+    # tuned for one scale).  Measured (tools/hotgram_stress.py): every
+    # skew-safe spelling LOSES at sf0.1 (salted collect_list pack +80%,
+    # two-pass agg+semi +~15% flat and
     # 2x the md5 work), the salted pack additionally GC-thrashes under
     # the very skew it targets (object arrays), and the spill-backed
     # WindowExec stays robust to a 24M-row hot gram — the agg+semi

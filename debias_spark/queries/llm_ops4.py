@@ -13,10 +13,6 @@ Four themes:
   extraction (Z22), and the end-to-end dedup pipeline composition (Z20).
 - Structured Streaming: watermark dedup (Z9), stream-static join with a
   full SQL oracle (Z12), watermarked stream-stream join (Z19).
-
-Registration position: imported after llm_ops3, so these keys land in the
-unproven-first block of the driver priority order (registry.priority_ordered
-lists them explicitly after the round-1-unproven keys).
 """
 
 from __future__ import annotations

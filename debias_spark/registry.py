@@ -5,9 +5,8 @@ Every operator from SURVEY.md §2 registers itself here with:
   - an optional ANSI-SQL DuckDB oracle string over the same parquet views
     (None => rows-only check: genuinely non-SQL-expressible ops)
 
-``__spark_entry__.py`` exposes this registry verbatim to the driver; tests
-iterate it to run the same oracle comparison locally at sf0.001 before the
-driver does at sf0.01.
+``__spark_entry__.py`` exposes this registry to the driver in registration
+order; tests iterate it to run the same oracle comparison locally.
 """
 
 from __future__ import annotations
@@ -52,267 +51,3 @@ def load_all_queries() -> dict[str, QuerySpec]:
     import debias_spark.queries  # noqa: F401  (imports submodules)
 
     return QUERIES
-
-
-# The driver iterates queries() in dict order and rounds 1-7 showed it
-# checks exactly the first 50 keys per round.  Through round 7 the order
-# was a hand-maintained DRIVER_PRIORITY list rebuilt each round — and the
-# rebuild went stale twice (r6 and r7 verdicts' only defect), because a
-# manual drill can only ship one round late.  The order is now DERIVED at
-# import time from the committed CORRECTNESS_r*.json artifacts, so the
-# stale-priority class cannot recur:
-#
-#   1. never-driver-checked keys first (absent from every committed
-#      CORRECTNESS file — brand-new keys are unproven by definition),
-#      in registration order;
-#   2. keys whose LATEST driver check failed;
-#   3. keys in CHANGED_SINCE_CHECK below — implementation or oracle
-#      edited after their latest green check (the one input that cannot
-#      be derived from artifacts; builders append {key: round} when
-#      rewriting a driver-proven key and the entry DRAINS ITSELF once a
-#      green check at/after that round lands — see changed_pending);
-#   4. the evidenced greens, stalest latest-check first (round asc, then
-#      position within that round's file) — so old evidence refreshes
-#      before recent evidence re-proves.
-#
-# Keep (new + failed + changed) at or under 50 so one driver window
-# covers every key that needs proof.
-
-# New keys built AFTER the current round's 50-key window filled: they
-# stay unproven until next round by construction (the r6/r7 "round-N+1
-# block" pattern), so they defer BEHIND the failed/changed keys whose
-# re-proof the window must cover first, while still preceding every
-# evidenced green.  Drain entries once their first CORRECTNESS row lands.
-DEFERRED_NEW_KEYS: list[str] = [
-    # round-8 wave 2+: built after the r8 window filled (39 carried-over
-    # r7 keys + 9 changed + Y62/Z65); these lead round 9's window
-    "diag_skew_salt_autotune",
-    "orders_temporal_split_leakage",
-    "join_cbo_reorder_stats",
-    "docs_importance_resample",
-    "events_decayed_engagement",
-    "source_max_partition_bytes_scan",
-    "docs_dup_crosssource_matrix",
-]
-
-# Keys whose implementation or oracle changed AFTER their latest green
-# driver check, mapped to the FIRST round whose green check counts as
-# re-proof (= the round the change shipped in).  Entries drain
-# THEMSELVES: once a CORRECTNESS_r{N}.json with N >= the recorded round
-# shows the key green, it stops occupying a window slot — so a
-# forgotten manual drain cannot waste round-N+1 slots (the third
-# staleness class, closed mechanically like the other two).  Dict order
-# is re-proof priority.
-CHANGED_SINCE_CHECK: dict[str, int] = {
-    # --- r8 entries below all drained green in CORRECTNESS_r08 (kept
-    # for the audit trail; changed_pending skips them mechanically) ---
-    # r7 two-pass equal-width rewrite (2ab17f2); last driver check r4
-    "lineitem_weighted_median_price": 8,
-    # r8: operators/prefixsum NULL-safe bucket id + pmod window const
-    "orders_pareto_share": 8,
-    "orders_gini_revenue": 8,
-    "stats_spearman_corr": 8,
-    # r7 jsonl-sink orphan-.tmp sweep on commit (09a522a); checked r7 pre-fix
-    "sink_python_datasource": 8,
-    # r8 ADVICE: floor-eps oracle respelling (+ 0.500000001e0 single-add)
-    "semdedup_cluster_cosine": 8,
-    "embedding_mmr_rerank": 8,
-    "embedding_matryoshka_rerank": 8,
-    "bpe_encode_corpus": 8,
-    # --- r9: floor-eps respell batch 2 (the r8-advice transcendental
-    # sites: llm_ops8/13/17/21/25, relational_ext20/36) ---
-    "text_bigram_lm_score": 9,
-    "text_readability_flesch": 9,
-    "text_zipf_slope": 9,
-    "text_kl_divergence_lang": 9,
-    "text_trigram_diversity": 9,
-    "docs_trigram_renyi_entropy": 9,
-    "geo_grid_radius_join": 9,
-    "timeseries_linear_interp": 9,
-    "graph_neighbor_jaccard": 9,
-    # r9: Z65 state key widened to full md5 (r8 advice) + state write
-    # parallelized off the merge partitioning instead of coalesce(1)
-    # (r8 verdict #2)
-    "pipeline_incremental_refresh": 9,
-    # r9: gram build factored into operators.text.word_ngrams_frame so
-    # Y72's bloom prefilter provably screens the identical gram set
-    # (value-identical; re-proven at 3 SFs + equality test vs Y72)
-    "docs_contamination_ngram_audit": 9,
-    # --- r10: the five r9 ADVICE fixes (all value-identical on the
-    # current NULL-free / non-empty-source fixtures, re-proven anyway) ---
-    # X167: NULL filter before the distinct count (cross-engine parity)
-    "diag_encoding_advisor": 10,
-    # Y69: nullif(toks, 0) on the epochs_e4 divisor, both engines
-    "corpus_repeat_epoch_plan": 10,
-    # Z68/Z71: prune prefix built from known stem + sf tag, not by
-    # splitting the appId-suffixed dir name (r10, drained green);
-    # Z68 bumped to 11 below for the compaction threshold gate
-    "pipeline_checkpoint_resume": 10,
-    # Z70/X164/X166: in-key proof guards assert -> raise (python -O safe)
-    "source_gzip_unsplittable_scan": 10,
-    "diag_join_strategy_autotune": 10,
-    "diag_reused_exchange_proof": 10,
-    # r10: stage logic factored into shared operators so the corpus-build
-    # capstone (Z75) provably chains the IDENTICAL implementations —
-    # X53 -> operators/text.quality_verdict, Y55 -> operators/packing,
-    # Y72 -> llm_ops34.bloom_bits_literal/bloom_member (value-identical;
-    # re-proven at 3 SFs locally)
-    "docs_quality_filterchain": 10,
-    "docs_pack_nextfit_decreasing": 10,
-    "docs_decontam_bloom_prefilter": 10,
-    # r10 sweep of the X167 latent class across every .distinct()+count
-    # site: H13 was the one other instance (NULL user_id would count in
-    # Spark's distinct-pairs count but not the oracle's count(DISTINCT));
-    # Z51 checked consistent (both engines count the NULL row), the
-    # pagerank/bloom-bucket distincts feed joins, not counts
-    "agg_approx_distinct": 10,
-    # --- r11: verdict-item closes (all re-proven green at sf0.01
-    # locally via the full driver-sim sweep; queued for the driver's
-    # own re-stamp) ---
-    # Z20/H9e (+Y61, which embeds the H9e oracle): verified/edges CTEs
-    # materialized so the WITH RECURSIVE closure stops re-evaluating the
-    # minhash chain per iteration (2.1s -> 0.2s; values identical)
-    "dedup_pipeline_survivors": 11,
-    "dedup_clusters": 11,
-    "dedup_keep_best_quality": 11,
-    # Y5b: per-centroid scores rounded to 6 decimals before the argmax
-    # in BOTH engines (r11, drained green in CORRECTNESS_r11); bumped to
-    # 12 below for the assign_cell literal-node respell
-    # Z68: in-loop compaction gated on a per-partition file-count
-    # threshold (r11, drained green in CORRECTNESS_r11); r12 relaxed the
-    # guard to raise only on after > before (== is a legal no-op) — see
-    # the r12 block below for the bump to 12
-    # (Z75's oracle moved to the shared CORPUS_BUILD_ORACLE constant —
-    # byte-identical string, function untouched; no re-proof needed)
-    # --- r12: verdict-item closes ---
-    # Y74: checkpoint narrowed to the (vec_id, nrm, cell, codes) index
-    # row + every rerank join pinned with F.broadcast (r11 advice);
-    # Z68: compaction guard relaxed to raise only on after > before
-    # (after == before is a legal no-op on already-compact state; the
-    # oracle-visible dataflow is untouched)
-    "pipeline_incremental_neardup": 12,
-    # Z75/Z76: static eval-gram artifacts memoized per corpus (built once
-    # per process, keyed by documents-file signature; order-insensitive
-    # consumers) + Z76 builds eval_df once per run, not per drop
-    "pipeline_corpus_build": 12,
-    "pipeline_corpus_build_incremental": 12,
-    # r13: the r12 "Literal node" respell was a no-op (F.lit(list) IS
-    # CreateArray on PySpark classic); now genuinely single Literal
-    # nodes via 1-D ndarray lits (assign_cell centroids, flat PQ
-    # codebook + slice arithmetic).  Same values — pq_index_frame
-    # re-proven row-identical at sf0.001 — cold-compile cost only.
-    "similarity_ann_ivfpq": 13,
-    "similarity_ann_ivf_pinned": 13,
-    "similarity_ann_ivfpq_incremental": 13,
-    "similarity_ann_ivfpq_tombstone": 13,
-    # r13 verdict item 1: pipeline-capstone drop counts cut to the
-    # minimum their contracts need (Z76/Y75 2 drops, Z68 3, Z71 2+1,
-    # Z73 2 appends) — semantics are count-free by each key's declared
-    # batching-independence argument; oracles unchanged
-    "pipeline_corpus_build_incremental": 13,
-    "pipeline_incremental_neardup": 13,
-    "pipeline_checkpoint_resume": 13,
-    "pipeline_state_compaction": 13,
-}
-
-
-def changed_pending(specs: dict, ev: dict) -> list[str]:
-    """CHANGED_SINCE_CHECK entries still awaiting their post-change green
-    driver check (a green at/after the recorded round satisfies one).
-
-    Round granularity is sufficient BECAUSE of the driver protocol: the
-    CORRECTNESS_r{N} artifact is recorded exactly once, at round close,
-    against the round's final committed tree — so a round-N check always
-    post-dates every round-N change, and ``need = the round the change
-    shipped in`` can never be satisfied by a pre-change green.  If the
-    driver ever starts checking MID-round, record ``need = N + 1``
-    instead (a same-round green would no longer imply post-change)."""
-    out = []
-    for k, need in CHANGED_SINCE_CHECK.items():
-        if k not in specs:
-            continue
-        e = ev.get(k)
-        if e is not None and e[0] >= need and _record_green(
-            e[2], specs[k].oracle is not None
-        ):
-            continue  # re-proof landed; entry is spent
-        out.append(k)
-    return out
-
-
-def _correctness_evidence() -> dict[str, tuple[int, int, dict]]:
-    """Parse the committed CORRECTNESS_r*.json artifacts at the repo root
-    into {key: (latest_round, index_within_that_round, record)}."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ev: dict[str, tuple[int, int, dict]] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue  # a malformed artifact must not break queries()
-        if not isinstance(data, dict):
-            continue
-        for idx, (key, rec) in enumerate(data.items()):
-            if not isinstance(rec, dict):
-                continue
-            prev = ev.get(key)
-            if prev is None or rnd >= prev[0]:
-                ev[key] = (rnd, idx, rec)
-    return ev
-
-
-def _record_green(rec: dict, has_oracle: bool) -> bool:
-    """The driver's green criterion: value-hash match for oracled keys;
-    rows-observed for rows-only-by-design keys.  The branch is chosen by
-    what the spec demands NOW, not by how the record was checked: a
-    rows-only (err == 'no_oracle') record for a key that has since
-    GAINED an oracle is NOT green — the key re-enters the window for a
-    hash proof without anyone remembering CHANGED_SINCE_CHECK (r8 advice:
-    this staleness class is detectable from the artifacts alone)."""
-    if not has_oracle:
-        rows = rec.get("spark_rows")
-        return rec.get("err") in (None, "no_oracle") and isinstance(rows, int) and rows >= 0
-    return bool(
-        rec.get("err") is None
-        and rec.get("rows_match")
-        and rec.get("schema_match")
-        and rec.get("hash_match")
-    )
-
-
-def priority_ordered() -> dict[str, QuerySpec]:
-    """All queries, reordered for the driver's 50-key window, derived
-    mechanically from the committed CORRECTNESS_r*.json artifacts:
-    never-checked first, then latest-check failures, then
-    CHANGED_SINCE_CHECK, then greens stalest-evidence-first."""
-    specs = load_all_queries()
-    ev = _correctness_evidence()
-
-    deferred_set = {k for k in DEFERRED_NEW_KEYS if k in specs and k not in ev}
-    never = [k for k in specs if k not in ev and k not in deferred_set]
-    failed = [
-        k
-        for k in specs
-        if k in ev and not _record_green(ev[k][2], specs[k].oracle is not None)
-    ]
-    head = set(never) | set(failed) | deferred_set
-    changed = [k for k in changed_pending(specs, ev) if k not in head]
-    head |= set(changed)
-    deferred = [k for k in DEFERRED_NEW_KEYS if k in deferred_set]
-    greens = sorted(
-        (k for k in specs if k not in head),
-        key=lambda k: (ev[k][0], ev[k][1]),
-    )
-    order = never + failed + changed + deferred + greens
-    assert len(order) == len(specs), "priority order must be a permutation"
-    return {k: specs[k] for k in order}

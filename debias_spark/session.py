@@ -21,16 +21,23 @@ APP_NAME = "debias-spark"
 # its own: the driver's cwd or sys.path edits do not reach it.
 _PACKAGE_PARENT = str(pathlib.Path(__file__).resolve().parent.parent)
 
+# The SQL confs the engine depends on, all settable at runtime: get_spark
+# builds its session with them, and catalog.ensure_runtime_confs re-applies
+# them on every table access, so a session the engine did not build (the
+# driver harness constructs its own) behaves the same.
+#
 # Scale posture (SURVEY §6): these settings are chosen for correctness at
 # local scale AND sanity at cluster scale.  shuffle.partitions=32 matches
-# local[32]; on a real cluster AQE coalesces the initial number downward, so
-# a larger initial value (e.g. 2000) with AQE is the production setting —
-# documented here rather than hard-coded because the driver pins local[32].
-_BASE_CONF = {
+# local[32]; Spark's default of 200 is pure scheduling overhead at
+# correctness-gate scale.  On a real cluster AQE coalesces the initial
+# number downward, so a larger initial value (e.g. 2000) with AQE is the
+# production setting.
+SQL_CONFS = {
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # the oracle comparison contract
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Annotator batches (SURVEY F1): the reference batches one whole file per
@@ -44,8 +51,6 @@ _BASE_CONF = {
     # projection that computes them.  Our plans carry explicit filters, so
     # inferred constraints only cost here.
     "spark.sql.constraintPropagation.enabled": "false",
-    "spark.ui.showConsoleProgress": "false",
-    "spark.ui.enabled": "false",
     # Some testdata generations carry events.ts as TIMESTAMP(NANOS), which
     # Spark has no native type for: read as epoch-nanos long, and
     # catalog.py rebuilds a timestamp_ntz column (exact integer arithmetic,
@@ -54,12 +59,17 @@ _BASE_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
+_UI_CONF = {
+    "spark.ui.showConsoleProgress": "false",
+    "spark.ui.enabled": "false",
+}
+
 
 def get_spark(app_name: str = APP_NAME, extra_conf: dict | None = None) -> SparkSession:
     """Build (or reuse) the session.  Honors $SPARK_GRAFT_CPUS for local[N]."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    for k, v in _BASE_CONF.items():
+    for k, v in {**SQL_CONFS, **_UI_CONF}.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     # Spark appends the driver's $PYTHONPATH to this on the workers.

@@ -57,12 +57,12 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp, and is normalized to TimestampType either way)."""
     from pyspark.sql.types import LongType
 
-    from debias_spark.catalog import _cached_schema, ensure_runtime_confs
+    from debias_spark.catalog import _cached_schema
 
-    ensure_runtime_confs(spark)  # nanosAsLong before touching events.parquet
-    # r14: schema from the session cache (catalog._cached_schema) — the
-    # streaming read needs the schema object anyway; inferring it fresh
-    # per call re-read the footer (~0.1 s) on every streaming key
+    # schema from the session cache (catalog._cached_schema, which also sets
+    # nanosAsLong) — the streaming read needs the schema object anyway;
+    # inferring it fresh per call re-read the footer (~0.1 s) on every
+    # streaming key
     raw_schema = _cached_schema(spark, f"{sf_dir}/events.parquet")
     if raw_schema is None:
         raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema

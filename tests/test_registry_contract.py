@@ -1,106 +1,24 @@
-"""Driver-contract invariants: the priority ordering the driver consumes is
-DERIVED from the committed CORRECTNESS_r*.json artifacts (round-8 rebuild of
-the twice-stale hand-maintained list), so these tests pin the derivation:
-every unproven key must lead the 50-key window, failures and changed keys
-must precede greens, and the order must stay a total permutation of the
-registry."""
+"""Driver-contract invariants: ``__spark_entry__`` exposes every registered
+key once, in registration order, with an oracle for every oracled key; and
+every declared oracle stays hash-safe, tie-safe and fast for the driver's
+value comparison."""
 
 from __future__ import annotations
 
-from debias_spark.registry import (
-    CHANGED_SINCE_CHECK,
-    DEFERRED_NEW_KEYS,
-    _correctness_evidence,
-    _record_green,
-    changed_pending,
-    load_all_queries,
-    priority_ordered,
-)
+from debias_spark.registry import load_all_queries
 
 
 def test_priority_ordering_is_total_permutation():
+    """queries() is the registry in registration order (so no duplicates
+    and no missing key), and oracle_sql() covers exactly the oracled keys."""
+    import __spark_entry__ as entrymod
+
     specs = load_all_queries()
-    order = list(priority_ordered())
-    assert len(order) == len(set(order)), "duplicates"
-    assert set(order) == set(specs), set(order) ^ set(specs)
-
-
-def test_never_driver_checked_keys_lead_the_window():
-    """The round-7/round-6 stale-priority defect, made structurally
-    impossible: every registry key absent from the committed CORRECTNESS
-    files must sit at the HEAD of priority_ordered() (before any key the
-    driver already proved) — the driver checks exactly the first 50 keys,
-    so an unproven key behind a proven one is a wasted round of evidence.
-    Keys in DEFERRED_NEW_KEYS are the sanctioned exception: built after
-    the window filled, they slot after the failed/changed re-proofs but
-    still before every green."""
-    specs = load_all_queries()
-    ev = _correctness_evidence()
-    never = {k for k in specs if k not in ev} - set(DEFERRED_NEW_KEYS)
-    order = list(priority_ordered())
-    head = set(order[: len(never)])
-    assert head == never, (
-        f"never-checked keys not leading: missing from head "
-        f"{sorted(never - head)}; proven keys in head {sorted(head - never)}"
-    )
-
-
-def test_failed_changed_and_deferred_precede_all_greens():
-    specs = load_all_queries()
-    ev = _correctness_evidence()
-    order = list(priority_ordered())
-    pos = {k: i for i, k in enumerate(order)}
-    needs_proof = set(changed_pending(specs, ev)) | {
-        k
-        for k in specs
-        if k not in ev
-        or not _record_green(ev[k][2], specs[k].oracle is not None)
-    }
-    first_green = min(
-        (pos[k] for k in specs if k not in needs_proof), default=len(order)
-    )
-    late = [k for k in needs_proof if pos[k] > first_green]
-    assert not late, f"keys needing proof behind a green: {late}"
-
-
-def test_green_tail_is_stalest_first():
-    specs = load_all_queries()
-    ev = _correctness_evidence()
-    order = list(priority_ordered())
-    pending = set(changed_pending(specs, ev))
-    tail = [
-        k
-        for k in order
-        if k in ev
-        and k not in pending
-        and _record_green(ev[k][2], specs[k].oracle is not None)
-    ]
-    keys = [(ev[k][0], ev[k][1]) for k in tail]
-    assert keys == sorted(keys), "green tail must be (round, index)-sorted"
-
-
-def test_window_covers_every_key_needing_proof():
-    """(new + failed + changed), excluding the consciously DEFERRED new
-    keys, must fit the driver's 50-key window; a 51st unproven key would
-    otherwise silently wait a full round — flag it here so the builder
-    either trims CHANGED_SINCE_CHECK or defers the key explicitly."""
-    specs = load_all_queries()
-    ev = _correctness_evidence()
-    pending = set(changed_pending(specs, ev))
-    needing = [
-        k
-        for k in specs
-        if (k not in ev and k not in DEFERRED_NEW_KEYS)
-        or (
-            k in ev
-            and not _record_green(ev[k][2], specs[k].oracle is not None)
-        )
-        or (k in ev and k in pending)
-    ]
-    assert len(needing) <= 50, (
-        f"{len(needing)} keys need driver proof but the window holds 50: "
-        f"defer new keys (DEFERRED_NEW_KEYS) or trim CHANGED_SINCE_CHECK"
-    )
+    qs, osql = entrymod.queries(), entrymod.oracle_sql()
+    assert list(qs) == list(specs)
+    assert set(osql) == {k for k, s in specs.items() if s.oracle is not None}
+    assert all(callable(fn) for fn in qs.values())
+    assert all(isinstance(sql, str) for sql in osql.values())
 
 
 def test_every_key_has_callable_and_section():
@@ -211,30 +129,3 @@ def test_floor_eps_oracles_keep_boundary_margin():
         f"{fragile} — widen the emission scale or restate the formula "
         f"over integers (see tools/float_margin_audit.py)"
     )
-
-
-def test_changed_entries_drain_once_reproven():
-    """A CHANGED_SINCE_CHECK entry stops consuming a window slot as soon
-    as a CORRECTNESS round >= its recorded round shows the key green —
-    the manual-drain failure mode cannot waste round-N+1 slots."""
-    specs = load_all_queries()
-    ev = _correctness_evidence()
-    any_key = next(iter(CHANGED_SINCE_CHECK))
-    need = CHANGED_SINCE_CHECK[any_key]
-    fake_ev = dict(ev)
-    fake_ev[any_key] = (
-        need,
-        0,
-        {"err": None, "rows_match": True, "schema_match": True, "hash_match": True,
-         "spark_rows": 1, "oracle_rows": 1},
-    )
-    assert any_key in changed_pending(specs, ev) or (
-        any_key in ev
-        and ev[any_key][0] >= need
-        and _record_green(ev[any_key][2], specs[any_key].oracle is not None)
-    )
-    assert any_key not in changed_pending(specs, fake_ev)
-    # and a pre-change green does NOT satisfy it
-    stale_ev = dict(fake_ev)
-    stale_ev[any_key] = (need - 1, 0, fake_ev[any_key][2])
-    assert any_key in changed_pending(specs, stale_ev)

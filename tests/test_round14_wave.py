@@ -19,18 +19,19 @@ def specs():
     return load_all_queries()
 
 
-def test_substring_dup_spans_salted_path_equivalence(spark, specs, monkeypatch):
+def test_substring_dup_spans_two_pass_path_equivalence(spark, specs, monkeypatch):
     """The hot-gram skew gate (llm_ops31._GRAM_WINDOW_MAX) picks between
-    the per-gk count window and the salted-pack spelling; both must
-    produce the identical span report.  Forcing the gate to 0 exercises
-    the salted path on the fixture corpus (whose gram count is far below
-    the production bound)."""
+    the per-gk count window and the two-pass spelling (per-gk hash
+    aggregate + left-semi join); both must produce the identical span
+    report.  Forcing the gate to 0 runs the two-pass agg + left-semi path
+    on the fixture corpus (whose gram count is far below the production
+    bound)."""
     import debias_spark.queries.llm_ops31 as m
 
     plain = specs["docs_substring_dup_spans"].fn(spark, SF).collect()
     monkeypatch.setattr(m, "_GRAM_WINDOW_MAX", 0)
-    salted = specs["docs_substring_dup_spans"].fn(spark, SF).collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
+    two_pass = specs["docs_substring_dup_spans"].fn(spark, SF).collect()
+    assert sorted(map(tuple, plain)) == sorted(map(tuple, two_pass))
     assert plain  # and not vacuously empty
 
 
@@ -75,3 +76,26 @@ def test_catalog_stat_cache_keys_on_file_version(tmp_path):
     # uncacheable path: computed every time
     assert cached_input_stat(str(tmp_path), "k", compute) == 42
     assert len(calls) == 3
+
+
+def test_cached_schema_sets_nanos_conf_before_inferring(spark, tmp_path):
+    """_cached_schema caches for the process lifetime, so it must set the
+    engine confs before it infers: a TIMESTAMP(NANOS) column inferred with
+    nanosAsLong off would raise (or cache a wrong schema)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType
+
+    from debias_spark.catalog import _cached_schema
+
+    path = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_700_000_000_123_456_789], type=pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        sch = _cached_schema(spark, path)
+        assert isinstance(sch["ts"].dataType, LongType)
+    finally:
+        spark.conf.set(key, prev)
