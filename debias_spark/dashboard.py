@@ -25,14 +25,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from debias_spark.pipeline import issue_distribution, record_distribution
+
 
 def dashboard_data(frame: DataFrame, top_issues: int = 30) -> dict:
     """Collect the two dashboards' data, bounded: top-N issues per language
     (plus the all-languages view) and the per-record issue-count histogram."""
-    tags = frame.filter(F.col("issue_literal").isNotNull())
-
     per_lang = (
-        tags.groupBy("language", "issue_literal")
+        frame.filter(F.col("issue_literal").isNotNull())
+        .groupBy("language", "issue_literal")
         .agg(F.count("*").alias("n"))
         .withColumn(
             "rk",
@@ -46,26 +47,15 @@ def dashboard_data(frame: DataFrame, top_issues: int = 30) -> dict:
         .orderBy("language", "rk")
         .collect()
     )
-    overall = (
-        tags.groupBy("issue_literal")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("issue_literal"))
-        .limit(top_issues)
-        .collect()
-    )
+    overall = issue_distribution(frame).limit(top_issues).collect()
     issues: dict[str, list] = {"all": [[r.issue_literal, r.n] for r in overall]}
     for r in per_lang:
         issues.setdefault(r.language, []).append([r.issue_literal, r.n])
 
-    hist_rows = (
-        frame.groupBy("record_literal")
-        .agg(F.max("tag_count_per_record").alias("n_issues"))
-        .groupBy("n_issues")
-        .agg(F.count("*").alias("n_records"))
-        .orderBy("n_issues")
-        .collect()
-    )
-    histogram = [[int(r.n_issues), int(r.n_records)] for r in hist_rows]
+    histogram = [
+        [int(r.n_issues), int(r.n_records)]
+        for r in record_distribution(frame).collect()
+    ]
     return {"issues": issues, "histogram": histogram}
 
 

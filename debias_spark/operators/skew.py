@@ -10,6 +10,7 @@ the plain join exactly (asserted in tests).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -88,6 +89,11 @@ _SHUFFLE_NODES = (
     "Intersect",
     "Except",
 )
+# the node name opening each line of a plan tree string (after the "+- ",
+# ":- " and ":  " tree markers) — matching names, not the whole text,
+# keeps a column alias, literal or path that spells "Sorted" or "Join"
+# from disabling fan_out
+_PLAN_NODE = re.compile(r"^[\s:+\-!']*(\w+)", re.M)
 
 
 def _bytes_conf(spark, key: str, default: int) -> int:
@@ -142,7 +148,8 @@ def fan_out(df: DataFrame) -> DataFrame:
     target = spark.sparkContext.defaultParallelism
     try:
         analyzed = df._jdf.queryExecution().analyzed().toString()
-        if any(node in analyzed for node in _SHUFFLE_NODES):
+        names = _PLAN_NODE.findall(analyzed)
+        if any(node in name for name in names for node in _SHUFFLE_NODES):
             return df
     except Exception:
         pass  # probe is best-effort; fall through to the file estimate

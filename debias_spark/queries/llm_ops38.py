@@ -39,7 +39,7 @@ from debias_spark.queries.llm_ops37 import (
     pq_codebook,
     pq_index_frame,
 )
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain
 from debias_spark.registry import register
 
 # TWO drops, not four (r12 verdict item 1): incremental maintenance
@@ -111,41 +111,25 @@ def similarity_ann_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFr
             "corpus is too small to exercise incremental index maintenance"
         )
 
-    batches: list[int] = []
-
     def refresh(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():  # availableNow's trailing empty commit batch
             return
-        batches.append(batch_id)
         # the drop indexes itself: pure projection, no state read, no
         # shuffle; append lands under the cell's inverted-list partition
         pq_index_frame(batch, book).write.mode("append").partitionBy(
             "cell"
         ).parquet(idx_dir)
 
-    with narrow_shuffle(spark, 8):
-        q = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "similarity_ann_ivfpq_incremental: availableNow drain "
-                    "did not finish within 300s"
-                )
-        finally:
-            q.stop()
-    if len(batches) < 2:
-        raise RuntimeError(
-            f"similarity_ann_ivfpq_incremental drained in {len(batches)} "
-            "micro-batch(es); incremental maintenance was not exercised"
-        )
+    drain(
+        spark,
+        spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(refresh)
+        .option("checkpointLocation", ckpt_dir),
+        8,
+        min_batches=2,  # a later drop appended to existing state
+    )
 
     index = spark.read.parquet(idx_dir)
     # readback guard (the shard-uniqueness doctrine), ONE aggregate job:

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from debias_spark.catalog import table
 from debias_spark.operators.text import NORMALIZE_STRICT_DUCK, normalize_strict
 from debias_spark.queries.io_roundtrip import _WAREHOUSE, _sink_dir
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain
 from debias_spark.registry import register
 
 _SHORT_LT = 100  # annotate: docs under this many chars flagged short
@@ -69,8 +69,8 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batching-independence (what makes a streaming chain value-oracled):
     the survivor merge is an argmax by (n_chars desc, doc_id asc) — an
     associative, commutative struct-max — so the final state is
-    identical however availableNow slices the input; the foreachBatch
-    body asserts the drain really took >= 2 non-empty batches so the
+    identical however availableNow slices the input; the drain asserts
+    it really took >= 2 non-empty batches so the
     incremental path is what got proven, not a degenerate single batch.
 
     Scale shape: each batch shuffles full 128-bit md5 digests (r8
@@ -107,12 +107,10 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.repartition(4).write.mode("overwrite").parquet(src_dir)
 
     norm = normalize_strict(F.col("text"))
-    batches: list[int] = []
 
     def refresh(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():  # availableNow's trailing empty commit batch
             return
-        batches.append(batch_id)
         ann = batch.select(
             F.md5(norm).alias("digest"),
             F.struct(
@@ -135,36 +133,19 @@ def pipeline_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # read-side benefit: the merge reads ALL state anyway)
         swap_state_write(surv, state_dir)
 
-    # dial shuffle width down for the drain: each micro-batch shuffles a
-    # FRACTION of an already-small state frame, and 200-partition batch
-    # plans pay pure task-launch overhead 4x over (rule-9 cousin); the
-    # finally restores the never-set case with unset, not skip (rule 20)
-    with narrow_shuffle(spark, 8):
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            # awaitTermination returns False on timeout: fail LOUDLY then —
-            # stopping a half-drained stream would otherwise surface as a
-            # confusing value mismatch instead of a timeout
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "pipeline_incremental_refresh: availableNow drain did "
-                    "not finish within 300s"
-                )
-        finally:
-            q.stop()
-    if len(batches) < 2:
-        raise RuntimeError(
-            f"pipeline_incremental_refresh drained in {len(batches)} "
-            "micro-batch(es); the incremental merge path was not exercised"
-        )
+    # narrow drain: each micro-batch shuffles a FRACTION of an
+    # already-small state frame; full-width batch plans pay pure
+    # task-launch overhead
+    drain(
+        spark,
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(refresh)
+        .option("checkpointLocation", ckpt_dir),
+        8,
+        min_batches=2,  # the merge path ran against state
+    )
 
     state = spark.read.parquet(state_dir)
     survivors = state.select(

@@ -23,7 +23,7 @@ from debias_spark.operators.text import NORMALIZE_STRICT_DUCK
 from debias_spark.operators.skew import fan_out
 from debias_spark.queries.io_roundtrip import _WAREHOUSE, _sink_dir
 from debias_spark.queries.llm_ops import _minhash_ctes
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain
 from debias_spark.registry import register
 
 _NH, _NB = 32, 4  # minhash hashes / bands (the H9 family constants)
@@ -252,7 +252,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ascending id ranges, ascending mtimes; FileStreamSource processes
     oldest-first).  Dropped docs stay IN the band state — they keep
     suppressing later copies, exactly as the pure predicate requires.
-    The foreachBatch body asserts >= 2 non-empty batches ran.
+    The drain asserts >= 2 non-empty batches ran.
 
     Scale shape: per batch the only wide work is its OWN rows' shingle
     explode (history is signatures and sig-bearing band rows — 32 ints
@@ -338,12 +338,9 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             mtime=t0 + 60 * i,
         )
 
-    batches: list[int] = []
-
     def refresh(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():  # availableNow's trailing empty commit batch
             return
-        batches.append(batch_id)
         ss = batch.sparkSession
         batch = fan_out(batch)  # a staged drop scans as ONE partition (r13)
         b_sh = batch.select(
@@ -394,7 +391,7 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch counts (r10 verdict item 5).
         threshold = int(os.environ.get(_COMPACT_ENV, _COMPACT_FILES_DEFAULT))
         if (
-            len(batches) >= 2
+            batch_id >= 1
             and os.path.isdir(band_dir)
             and _max_band_partition_files(band_dir) > threshold
         ):
@@ -411,29 +408,16 @@ def pipeline_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             global LAST_COMPACTIONS
             LAST_COMPACTIONS += 1
 
-    with narrow_shuffle(spark, 8):
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "pipeline_incremental_neardup: availableNow drain did "
-                    "not finish within 300s"
-                )
-        finally:
-            q.stop()
-    if len(batches) < 2:
-        raise RuntimeError(
-            f"pipeline_incremental_neardup drained in {len(batches)} "
-            "micro-batch(es); the incremental screen was not exercised"
-        )
+    drain(
+        spark,
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(refresh)
+        .option("checkpointLocation", ckpt_dir),
+        8,
+        min_batches=2,  # the incremental screen ran against state
+    )
 
     pay = spark.read.parquet(pay_dir)
     keep = ~F.col("dropped")
@@ -551,36 +535,20 @@ def pipeline_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             surv = prev.unionByName(surv).groupBy("digest").agg(F.max("b").alias("b"))
         swap_state_write(surv, state_dir)
 
-    def drain() -> None:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "pipeline_checkpoint_resume: drain did not finish in 300s"
-                )
-        finally:
-            q.stop()
-
-    with narrow_shuffle(spark, 8):
-        for i in range(2):
-            stage(i)
-        drain()
-        first = list(seen)
-        if len(first) < 2:
-            raise RuntimeError(
-                f"first drain took {len(first)} non-empty batches; need >= 2"
-            )
-        stage(2)  # the late drop lands between refreshes
-        drain()
-        second = seen[len(first):]
+    writer = (
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(refresh)
+        .option("checkpointLocation", ckpt_dir)
+    )
+    for i in range(2):
+        stage(i)
+    drain(spark, writer, 8, min_batches=2)
+    first = list(seen)
+    stage(2)  # the late drop lands between refreshes
+    drain(spark, writer, 8)
+    second = seen[len(first):]
 
     # exactly-once, both halves: ONE new batch, with exactly the new
     # file's rows, and its batch id CONTINUES the checkpoint's sequence

@@ -51,7 +51,7 @@ from debias_spark.queries.pipeline_e2e5 import (
     _GRAM_N,
     CORPUS_BUILD_ORACLE,
 )
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain
 from debias_spark.registry import register
 
 
@@ -184,12 +184,9 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
             "too small to exercise the incremental chain"
         )
 
-    batches: list[int] = []
-
     def refresh(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        batches.append(batch_id)
         ss = batch.sparkSession
         batch = fan_out(batch)  # a staged drop scans as ONE partition (r13)
 
@@ -286,29 +283,16 @@ def pipeline_corpus_build_incremental(spark: SparkSession, sf_dir: str) -> DataF
         )
         manifest.write.mode("append").parquet(man_dir)
 
-    with narrow_shuffle(spark, 8):
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(refresh)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise RuntimeError(
-                    "pipeline_corpus_build_incremental: availableNow drain "
-                    "did not finish within 300s"
-                )
-        finally:
-            q.stop()
-    if len(batches) < 2:
-        raise RuntimeError(
-            f"pipeline_corpus_build_incremental drained in {len(batches)} "
-            "micro-batch(es); the incremental chain was not exercised"
-        )
+    drain(
+        spark,
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(refresh)
+        .option("checkpointLocation", ckpt_dir),
+        8,
+        min_batches=2,  # the incremental chain ran against state
+    )
 
     out = spark.read.parquet(man_dir)
     n, nd = out.count(), out.select("shard").distinct().count()

@@ -21,7 +21,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain
 from debias_spark.registry import register
 from debias_spark.warehouse import prune_stale_siblings, warehouse_root
 
@@ -56,7 +56,7 @@ def stream_stream_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
     source) emits exactly the batch range-join result.  A multi-batch drain
     could split the two sides across batches in file order (not event-time
     order) and legitimately drop late state — fail LOUDLY on that, exactly
-    like stream_foreachbatch_upsert (streaming_ext2.py:85), rather than
+    like stream_foreachbatch_upsert (streaming_ext2.py), rather than
     silently diverging from the oracle.  value converts to integer cents
     per row before emission so float formatting cannot drift the hash.
 
@@ -113,21 +113,15 @@ def stream_stream_join_attrib(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         batch.write.mode("append").parquet(out_dir)
 
-    # state-store instances are one per shuffle partition PER JOIN SIDE;
-    # this drain-and-stop snapshot dials partitions down for the run (the
-    # run_available_now discipline, incremental.py:114) — most of the
-    # wall-clock at small data is state-store setup (measured 7.9s at 32
-    # partitions vs 2.5s at 4; 2 is no better — the residual is engine
-    # fixed cost: batch scheduling, checkpoint fsyncs, capture IO); a
-    # long-lived production stream keeps the session default
-    with narrow_shuffle(spark, 4):
-        q = (
-            joined.writeStream.foreachBatch(capture)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        q.awaitTermination()
+    # state-store instances are one per shuffle partition PER JOIN SIDE,
+    # so this drain runs at width 4 (measured 7.9s at 32 partitions vs
+    # 2.5s at 4; 2 is no better — the residual is engine fixed cost:
+    # batch scheduling, checkpoint fsyncs, capture IO)
+    drain(
+        spark,
+        joined.writeStream.foreachBatch(capture).option("checkpointLocation", ckpt_dir),
+        4,
+    )
     shutil.rmtree(ckpt_dir, ignore_errors=True)
     return spark.read.parquet(out_dir).select(
         "user_id", "purchase_time", "click_time", "value_cents"

@@ -23,7 +23,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from debias_spark.streaming import narrow_shuffle
+from debias_spark.streaming import drain
 from debias_spark.registry import register
 from debias_spark.warehouse import prune_stale_siblings, warehouse_root
 
@@ -81,15 +81,13 @@ def stream_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     # handful of event_type keys needs 8, not the session's 32 (r13:
     # the only material r12 floor regression on this key was drain-side
     # fixed cost; values are partition-count independent)
-    with narrow_shuffle(spark, 8):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("noop")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        spark,
+        counts.writeStream.outputMode("update")
+        .format("noop")
+        .option("checkpointLocation", ckpt),
+        8,
+    )
 
     state = spark.read.format("statestore").load(ckpt)
     return (

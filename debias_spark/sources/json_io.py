@@ -27,15 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
+from debias_spark.annotate.annotator import TAG_SCHEMA
 from debias_spark.sources.text_corpus import path_parts
-
-TAG_SCHEMA = StructType(
-    [
-        StructField("literal", StringType()),
-        StructField("issue", StringType()),
-        StructField("source", StringType()),
-    ]
-)
 
 # SURVEY §1.2 — the canonical nested response document
 RESPONSE_SCHEMA = StructType(

@@ -1,4 +1,5 @@
 from debias_spark.streaming.incremental import (
+    drain,
     narrow_shuffle,
     run_available_now,
     session_window_counts,
@@ -7,6 +8,7 @@ from debias_spark.streaming.incremental import (
 )
 
 __all__ = [
+    "drain",
     "narrow_shuffle",
     "run_available_now",
     "session_window_counts",

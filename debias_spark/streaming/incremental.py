@@ -21,23 +21,17 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+# how long one availableNow drain may run before it is called stalled
+DRAIN_TIMEOUT_S = 300
 
 
 @contextmanager
 def narrow_shuffle(spark: SparkSession, n: int = 8):
     """Pin spark.sql.shuffle.partitions to ``n`` for the duration of a
-    drain-and-stop block, restoring the previous value (or unsetting)
-    on exit — the one shared spelling of the narrow-drain doctrine
-    (state-store instances are one per shuffle partition, fixed at the
-    first micro-batch; a 2-batch local drain pays per-partition state
-    setup that dwarfs its data work at the session's full width).
-
-    SERIAL-SESSION ASSUMPTION (r13 verdict item 7): mutating session
-    conf is only safe because the bench and the driver run keys
-    SERIALLY in one session.  Any future concurrent execution of keys
-    in a shared session must replace this with per-write repartition(n)
-    or per-query conf, not share the session-level pin.
-    """
+    block, restoring the previous value (or unsetting) on exit.  The pin
+    is session-wide: see the serial-session note on ``drain``."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, str(n))
@@ -48,6 +42,47 @@ def narrow_shuffle(spark: SparkSession, n: int = 8):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+def drain(
+    spark: SparkSession, writer: DataStreamWriter, width: int, min_batches: int = 0
+) -> None:
+    """Run ``writer`` (source, sink, checkpoint and output mode already
+    set) to completion with the availableNow trigger — the dashboard
+    Refresh semantics: process everything there now, then stop.
+
+    The query starts under ``narrow_shuffle(spark, width)``: state-store
+    instances are one per shuffle partition, fixed at the first
+    micro-batch, and a short local drain pays per-partition state setup
+    that dwarfs its data work at the session's full width.  The same pin
+    covers every batch plan run inside a foreachBatch function.
+
+    SERIAL-SESSION ASSUMPTION: pinning session conf is only safe because
+    keys run serially in one session.  Concurrent drains in a shared
+    session need a per-query width instead.
+
+    Raises RuntimeError if the query has not finished within
+    ``DRAIN_TIMEOUT_S`` seconds, or if fewer than ``min_batches``
+    micro-batches read any input; a query failure propagates.  The query
+    is stopped in every case.  Only the sign of ``numInputRows`` is used:
+    it sums every action run on a batch, so a foreachBatch function that
+    reads its batch three times reports three times its rows."""
+    with narrow_shuffle(spark, width):
+        q = writer.trigger(availableNow=True).start()
+        try:
+            if not q.awaitTermination(DRAIN_TIMEOUT_S):
+                raise RuntimeError(
+                    f"stream {q.name or q.id}: availableNow drain did not "
+                    f"finish within {DRAIN_TIMEOUT_S}s"
+                )
+            n = sum(1 for p in q.recentProgress if p.numInputRows > 0)
+            if n < min_batches:
+                raise RuntimeError(
+                    f"stream {q.name or q.id} drained in {n} non-empty "
+                    f"micro-batch(es), expected at least {min_batches}"
+                )
+        finally:
+            q.stop()
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,13 +159,13 @@ def incremental_parquet_sink(
             out_dir
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream_df.sparkSession,
+        stream_df.writeStream.foreachBatch(write_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        8,
     )
-    q.awaitTermination()
 
 
 def run_available_now(
@@ -144,24 +179,21 @@ def run_available_now(
     "complete" for unwatermarked aggs (emits every window — what the
     batch-equivalence test uses).
 
-    State-store instances are one per shuffle partition, fixed at the first
-    micro-batch; these drain-and-stop snapshots use a fresh temp checkpoint
-    each call, so the partition count is dialed down for the run (4 state
-    dirs instead of 32 — most of availableNow wall-clock at small data is
-    state-store setup; measured 8 -> 4 -> 3 gives identical rows with
-    monotonically less setup) and restored after.  A long-lived production
-    stream keeps the session default and an explicit checkpointLocation."""
+    Each call drains into a fresh memory sink at shuffle width 4 (measured
+    8 -> 4 -> 3 gives identical rows with monotonically less state-store
+    setup).  The sink's temp view is dropped before returning; the frame
+    keeps the sink's rows, so they live only as long as the frame does.
+    A long-lived production stream keeps the session default width and
+    an explicit checkpointLocation."""
     name = f"snap_{uuid.uuid4().hex[:12]}"
-    with narrow_shuffle(spark, 4):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    drain(
+        spark,
+        stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        4,
+    )
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def rate_alerts(events: DataFrame, thresholds: DataFrame) -> DataFrame:

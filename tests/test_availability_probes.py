@@ -144,10 +144,11 @@ def test_sql_dml_update_delete_probe(spark):
     """UPDATE/DELETE/MERGE INTO SQL statements require a v2 ACID table
     provider (Delta/Iceberg — jars absent in this container); the built-in
     parquet/hive tables reject them.  The merge/SCD semantics themselves
-    are value-proven by merge_upsert_snapshot (X73), scd2_user_status
-    (X58) and stream_foreachbatch_upsert (Z27) over swap-rewritten
-    parquet; this probe flips to fail the round a DML-capable provider
-    appears so the SQL-statement surface gets implemented then."""
+    are value-proven by merge_upsert_snapshot (X73) and scd2_user_status
+    (X58) over swap-rewritten parquet (stream_foreachbatch_upsert (Z27)
+    writes a single-batch state and merges nothing); this probe flips to
+    fail the round a DML-capable provider appears so the SQL-statement
+    surface gets implemented then."""
     app = spark.sparkContext.applicationId.replace("-", "_")
     t = f"_probe_dml_{app}"
     spark.sql(f"DROP TABLE IF EXISTS {t}")

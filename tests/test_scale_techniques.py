@@ -74,3 +74,22 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
+
+
+def test_fan_out_ignores_node_names_inside_expressions(spark, tmp_path):
+    """fan_out's shuffle gate reads plan node names, not the plan text: a
+    literal that spells "Sorted" must not disable the round-robin exchange
+    over a one-file scan."""
+    from debias_spark.operators.skew import fan_out
+
+    dp = spark.sparkContext.defaultParallelism
+    if dp < 2:
+        pytest.skip("fan_out adds no exchange at defaultParallelism 1")
+    path = str(tmp_path / "one_file")
+    spark.range(100).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path).select("id", F.lit("Sorted").alias("tag"))
+    assert df.rdd.getNumPartitions() == 1  # the fixture premise
+    fanned = fan_out(df)
+    plan = fanned._jdf.queryExecution().executedPlan().toString()
+    assert f"RoundRobinPartitioning({dp})" in plan
+    assert fanned.rdd.getNumPartitions() == dp

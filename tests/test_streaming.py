@@ -4,10 +4,14 @@ the availableNow trigger."""
 
 from __future__ import annotations
 
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from debias_spark.catalog import table
 from debias_spark.streaming import (
+    drain,
     run_available_now,
     session_window_counts,
     stream_events,
@@ -25,6 +29,75 @@ def test_tumbling_batch_equals_stream(spark, sf_dir):
         tumbling_counts(stream_events(spark, sf_dir)), spark, output_mode="complete"
     )
     assert _sorted_rows(batch) == _sorted_rows(stream)
+
+
+def _snap_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.name.startswith("snap_")}
+
+
+def test_run_available_now_drops_its_memory_view(spark, sf_dir):
+    """Each call's memory-sink view is dropped before it returns; the
+    returned frame still holds the drained rows."""
+    batch = _sorted_rows(tumbling_counts(table(spark, sf_dir, "events")))
+    before = _snap_views(spark)
+    outs = [
+        run_available_now(
+            tumbling_counts(stream_events(spark, sf_dir)), spark, output_mode="complete"
+        )
+        for _ in range(2)
+    ]
+    assert _snap_views(spark) == before
+    for out in outs:
+        assert _sorted_rows(out) == batch
+
+
+_WIDTH_KEY = "spark.sql.shuffle.partitions"
+
+
+def _assert_drain_cleaned_up(spark, width_before):
+    assert spark.streams.active == []
+    assert spark.conf.get(_WIDTH_KEY, None) == width_before
+
+
+def test_drain_times_out_and_stops(spark, sf_dir, tmp_path, monkeypatch):
+    from debias_spark.streaming import incremental
+
+    monkeypatch.setattr(incremental, "DRAIN_TIMEOUT_S", 1)
+    width_before = spark.conf.get(_WIDTH_KEY, None)
+    writer = (
+        stream_events(spark, sf_dir)
+        .writeStream.foreachBatch(lambda batch, batch_id: time.sleep(3))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    with pytest.raises(RuntimeError, match="did not finish within 1s"):
+        drain(spark, writer, 4)
+    _assert_drain_cleaned_up(spark, width_before)
+
+
+def test_drain_propagates_batch_failure(spark, sf_dir, tmp_path):
+    def fail(batch, batch_id):
+        raise ValueError("drain-test batch failure")
+
+    width_before = spark.conf.get(_WIDTH_KEY, None)
+    writer = (
+        stream_events(spark, sf_dir)
+        .writeStream.foreachBatch(fail)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    with pytest.raises(Exception, match="drain-test batch failure"):
+        drain(spark, writer, 4)
+    _assert_drain_cleaned_up(spark, width_before)
+
+
+def test_drain_enforces_min_batches(spark, sf_dir, tmp_path):
+    """The single-file events source drains in one non-empty micro-batch."""
+    writer = (
+        stream_events(spark, sf_dir)
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+    )
+    with pytest.raises(RuntimeError, match="1 non-empty micro-batch"):
+        drain(spark, writer, 4, min_batches=2)
 
 
 def test_incremental_parquet_sink_is_incremental(spark, sf_dir, tmp_path):

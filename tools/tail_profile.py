@@ -7,7 +7,9 @@ bench keys, split warm per-key wall time into
            physical planning of the returned frame (pre-AQE)
   run      noop write — job execution including AQE re-planning
 
-Streaming/orchestrated keys (fn executes the work) report build only.
+Every key returns a batch frame.  Streaming keys drain their stream inside
+spec.fn(), so the drain counts as build; compile and run cover only the
+read-back of what the drain wrote.
 
 Usage: python tools/tail_profile.py key1,key2,... [--reps 3] [--sf DIR]
 Prints one JSON line per key: {"key":..., "build":..., "compile":..., "run":...}
@@ -42,15 +44,10 @@ def main() -> None:
             t0 = time.perf_counter()
             df = spec.fn(spark, sf)
             t1 = time.perf_counter()
-            if df.isStreaming:
-                df.count()
-                t2 = t3 = time.perf_counter()
-                t2 = t1  # no separate compile/run split for streaming keys
-            else:
-                df._jdf.queryExecution().executedPlan()
-                t2 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                t3 = time.perf_counter()
+            df._jdf.queryExecution().executedPlan()
+            t2 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t3 = time.perf_counter()
             if i > 0:
                 builds.append(t1 - t0)
                 compiles.append(t2 - t1)
